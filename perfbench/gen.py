@@ -9,7 +9,7 @@ Everything the program under test receives comes from here, from one seed:
   populations are Zipf; names come from per-country syllable grammars, so
   trigram posting lists are diverse rather than dominated by a few names;
 - the request streams of the two workloads (`autocomplete_sessions`,
-  `spatial_stream`).
+  `spatial_stream`), including the origin tables of the batch joins.
 
 Pure Python (stdlib only) and deterministic per seed.
 """
@@ -308,90 +308,90 @@ def _popular(shapes: list[dict], types: tuple[str, ...]) -> list[dict]:
     return rows
 
 
+#: fuzzy_search keystrokes per typing session (then one best_fuzzy_search)
+SESSION_KEYS = 4
+
+
 def autocomplete_sessions(shapes: list[dict], seed: int, n_sessions: int,
                           min_prefix: int = 3) -> list[list[dict]]:
-    """Typing sessions. Each picks a target (Zipf by popularity over cities,
-    counties and metros; one session in ten types a zip code), applies a
-    seeded typo in three sessions of ten, and types it one keystroke at a
-    time from `min_prefix` characters — one `fuzzy_search(num_results=10)`
-    per keystroke — until the user stops at a seeded point (a suggestion was
-    good enough), then submits the typed text as a `best_fuzzy_search`.
-    About one session in four carries a dotted-path filter."""
+    """Typing sessions of a fixed length, so that every run that completes
+    the same number of sessions sends the same mix. Each picks a place
+    (Zipf by popularity over cities, counties and metros), applies a seeded
+    typo in three sessions of ten, types `SESSION_KEYS` keystrokes from
+    `min_prefix` characters — one `fuzzy_search(num_results=10)` each — and
+    then submits the whole typed name as a `best_fuzzy_search` scoped by a
+    dotted-path filter (`ref_data.country` or `ref_data.state_prov` of the
+    place), so one request in five carries a filter."""
     rng = random.Random(seed * 104729 + 11)
     named = _popular(shapes, ("City", "County", "MetroArea"))
-    zips = [s for s in shapes if s["geo_type"] == "ZipCode"
-            and not s["is_three_digit_zip_code"] and s["ref_data"]["country"] != "CA"]
     zipf = ZipfSampler(min(len(named), 20_000), 1.0, rng)
     sessions = []
-    for _ in range(n_sessions):
-        if rng.random() < 0.1 and zips:
-            target = zips[rng.randrange(len(zips))]
-            text = target["ref_data"]["zip_code"]
-        else:
-            target = named[zipf.draw()]
-            text = target["value"]
+    while len(sessions) < n_sessions:
+        target = named[zipf.draw()]
+        text = target["value"]
         if rng.random() < 0.3:
             text = _typo(rng, text)
-        filters = None
-        if rng.random() < 0.25:
-            key = rng.choice(("ref_data.country", "ref_data.state_prov"))
-            filters = {key: target["ref_data"][key.split(".")[1]]}
-        stop = rng.randint(min(min_prefix + 3, len(text)), len(text))
-        reqs = [{"op": "fuzzy", "q": text[:k], "filters": filters}
-                for k in range(min_prefix, stop + 1)]
-        reqs.append({"op": "best_fuzzy", "q": text[:stop], "filters": filters})
+        key = rng.choice(("ref_data.country", "ref_data.state_prov"))
+        filters = {key: target["ref_data"][key.split(".")[1]]}
+        reqs = [{"op": "fuzzy", "q": text[:k], "filters": None}
+                for k in range(min_prefix, min_prefix + SESSION_KEYS)]
+        reqs.append({"op": "best_fuzzy", "q": text, "filters": filters})
         sessions.append(reqs)
     return sessions
 
 
-#: one cycle of the spatial mix; each cycle is shuffled, so the mix of every
-#: run is fixed while the order and the keys vary with the seed
-SPATIAL_CYCLE = (("radius", 4), ("radius_ll", 2), ("radius_pts", 1),
-                 ("by_ref", 1), ("by_id", 1), ("pair", 2), ("time", 1),
-                 ("radius_batch", 1))
-#: the radii (miles) of one cycle's radius_search, and of its lat/lng radius
-#: searches, each handed out in seeded order
+#: one cycle of the spatial mix: one request of each type, in seeded order.
+#: The uniform mix is an assumption (there is no traffic record to weight
+#: the types by); the end-to-end latency metric weights every type equally
+#: anyway (see run.py), so the mix sets the load, not the metric.
+SPATIAL_CYCLE = ("radius", "radius_ll", "radius_pts", "by_ref", "by_id", "pair",
+                 "time", "radius_batch", "radius_grid")
+#: radius_search radii (miles), one per cycle in a seeded rotation; the
+#: 10-mile one is sent with country_exact
 RADIUS_MILES = (10.0, 25.0, 50.0, 100.0)
+#: radii of the lat/lng radius searches, one per cycle in a seeded rotation
 LATLNG_MILES = (10.0, 25.0, 50.0)
-#: origins per radius_batch request, and their radius (miles)
+#: origins per batch request (radius_join and radius_join_gridded), and
+#: their radius (miles)
 BATCH_ORIGINS = 20
 BATCH_MILES = 25.0
 
 
 def spatial_stream(shapes: list[dict], seed: int, n_cycles: int) -> list[dict]:
     """The spatial mix: radius search by reference code (10/25/50/100 mi,
-    one of them with country_exact), radius search by lat/lng in both facade
-    forms, point gets by reference code and by id, pair distances, local
-    time, and a small batch radius join (nearby places for 20 origins). Keys
-    are Zipf over popularity; the mix and the radii of every cycle are the
-    same, only their order and the keys vary."""
+    the 10-mile one with country_exact), radius search by lat/lng in both
+    facade forms, point gets by reference code and by id, pair distance,
+    local time, and the two batch radius joins (`geo.radius.radius_join`
+    and `geo.grid.radius_join_gridded`, nearby places for 20 origins).
+    Keys are Zipf over popularity. Every cycle sends each type once; the
+    order, the radii's rotation and the keys vary with the seed."""
     rng = random.Random(seed * 15485863 + 7)
     pop = _popular(shapes, ("City", "County", "MetroArea", "ZipCode"))
     points = [s for s in pop if not s["is_aggregate"]]
     zipf = ZipfSampler(min(len(pop), 50_000), 0.9, rng)
-    cycle = [op for op, k in SPATIAL_CYCLE for _ in range(k)]
+    cycle = list(SPATIAL_CYCLE)
+    r0, l0 = rng.randrange(len(RADIUS_MILES)), rng.randrange(len(LATLNG_MILES))
     out = []
-    for _ in range(n_cycles):
+    for c in range(n_cycles):
         rng.shuffle(cycle)
-        radii = rng.sample(RADIUS_MILES, len(RADIUS_MILES))
-        ll_radii = rng.sample(LATLNG_MILES, len(LATLNG_MILES))
-        exact = rng.randrange(len(radii))
+        miles = RADIUS_MILES[(r0 + c) % len(RADIUS_MILES)]
+        ll_miles = LATLNG_MILES[(l0 + c) % len(LATLNG_MILES)]
         for op in cycle:
             s = pop[zipf.draw()]
             lat, lng = float(s["latitude"]), float(s["longitude"])
             if op == "radius":
-                out.append({"op": op, "ref": s["reference_code"], "radius": radii.pop(),
-                            "country_exact": len(radii) == exact})
+                out.append({"op": op, "ref": s["reference_code"], "radius": miles,
+                            "country_exact": miles == RADIUS_MILES[0]})
             elif op in ("radius_ll", "radius_pts"):
                 out.append({"op": op, "lat": round(lat + rng.uniform(-0.2, 0.2), 5),
                             "lng": round(lng + rng.uniform(-0.2, 0.2), 5),
-                            "radius": ll_radii.pop()})
+                            "radius": ll_miles})
             elif op == "by_id":
                 out.append({"op": op, "id": s["id"]})
             elif op == "pair":
                 out.append({"op": op, "ref": s["reference_code"],
                             "ref2": pop[zipf.draw()]["reference_code"]})
-            elif op == "radius_batch":
+            elif op in ("radius_batch", "radius_grid"):
                 origins = []
                 for i in range(BATCH_ORIGINS):
                     p = points[rng.randrange(len(points))]

@@ -1,6 +1,6 @@
 """Geo-serving benchmark: one run of one workload.
 
-    python3 perfbench/run.py --workload autocomplete --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload autocomplete --seed 1 --seconds 12 --trace 0
 
 Run from the repository root. The harness generates the seeded inputs, starts
 the workload in a child process (`worker.py`, with ``PYTHONPATH`` set to the
@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import random
 import shutil
@@ -51,12 +52,17 @@ HARD_LIMIT_S = 150.0
 
 WARM_FUZZY = "springfield"
 
-ALL_OPS = ("fuzzy", "best_fuzzy") + tuple(op for op, _ in gen.SPATIAL_CYCLE)
+#: request types each workload sends; every one of them must have samples
+WORKLOAD_OPS = {
+    "autocomplete": ("fuzzy", "best_fuzzy"),
+    "spatial": gen.SPATIAL_CYCLE,
+}
+ALL_OPS = WORKLOAD_OPS["autocomplete"] + WORKLOAD_OPS["spatial"]
 
 END_TO_END = {  # name -> unit
     "setup_s": "s",
     "req_per_s": "1/s",
-    "p50_ms": "ms",
+    "p50_gmean_ms": "ms",
 }
 
 
@@ -73,7 +79,9 @@ def per_layer_units() -> dict:
         "radius.join_pairs": "count", "radius.self_ms_per_req": "ms",
         "lookup.by_ref_ms": "ms", "lookup.by_id_ms": "ms",
         "lookup.local_time_ms": "ms", "lookup.self_ms_per_req": "ms",
-        "trace.facade_p50_ms": "ms", "trace.overhead_ms_per_req": "ms",
+        "grid.write_s": "s", "grid.join_s": "s", "grid.join_pairs": "count",
+        "grid.self_ms_per_req": "ms",
+        "trace.p50_gmean_ms": "ms", "trace.wrapper_ms_per_req": "ms",
         "trace.spans_per_req": "count",
         # the JVM's heap grows with G1's collection timing, so its peak RSS
         # spreads ~25 % between runs of the same code: reported, not bounded
@@ -83,6 +91,10 @@ def per_layer_units() -> dict:
         for op in ALL_OPS:
             units[f"spark.{kind}_per_req.{op}"] = "count"
     return units
+
+
+class NoSamples(Exception):
+    """A request type the workload sends has no sample for a metric."""
 
 
 # ------------------------------------------------------------------ inputs
@@ -96,20 +108,21 @@ def make_inputs(workload: str, seed: int, work: str) -> tuple[list[dict], dict]:
         sessions = gen.autocomplete_sessions(shapes, seed, 100 * AUTOCOMPLETE_CLIENTS)
         clients = [[r for s in sessions[k::AUTOCOMPLETE_CLIENTS] for r in s]
                    for k in range(AUTOCOMPLETE_CLIENTS)]
-        warmup = [{"op": "fuzzy", "q": WARM_FUZZY, "filters": None},
-                  {"op": "best_fuzzy", "q": WARM_FUZZY, "filters": None}]
-        cycle = 1
+        # set-up sends each type once, the two clients side by side
+        warmup = [[{"op": "fuzzy", "q": WARM_FUZZY, "filters": None}],
+                  [{"op": "best_fuzzy", "q": WARM_FUZZY,
+                    "filters": {"ref_data.country": "US"}}]]
+        cycle = gen.SESSION_KEYS + 1
     else:
         clients = [gen.spatial_stream(shapes, seed, 300)]
-        one_cycle = gen.spatial_stream(shapes, seed + 7_777, 1)
-        warmup = list({r["op"]: r for r in one_cycle}.values())
-        cycle = len(one_cycle)
+        warmup = [gen.spatial_stream(shapes, seed + 7_777, 1)]
+        cycle = len(gen.SPATIAL_CYCLE)
     rng = random.Random(seed * 31 + 17)
     for stream in clients:
         for req in stream:
             req["chk"] = rng.random() < CHECK_FRAC
     return shapes, {"base_url": base_url, "clients": clients, "warmup": warmup,
-                    "cycle": cycle}
+                    "cycle": cycle, "gridded": "radius_grid" in WORKLOAD_OPS[workload]}
 
 
 # ----------------------------------------------------------------- process
@@ -131,7 +144,9 @@ def wait_group_gone(pgid: int, timeout: float) -> None:
         time.sleep(0.1)
 
 
-def run_worker(args, work: str, t0: float) -> tuple[list[dict], dict | None, str]:
+def run_worker(args, work: str, t0: float) -> tuple[dict | None, str]:
+    """Run the workload in a child process over the inputs already in
+    `work`; returns its result (None if it failed) and the end of its log."""
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, env.get("PYTHONPATH", "")) if p)
@@ -150,11 +165,6 @@ def run_worker(args, work: str, t0: float) -> tuple[list[dict], dict | None, str
         proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=log,
                                 stderr=subprocess.STDOUT, start_new_session=True)
     try:
-        # the child boots its Spark session while the inputs are generated
-        shapes, inputs = make_inputs(args.workload, args.seed, work)
-        with open(os.path.join(work, "inputs.json"), "w") as f:
-            json.dump(inputs, f)
-        open(os.path.join(work, "ready"), "w").close()
         proc.wait(timeout=max(HARD_LIMIT_S - (time.time() - t0), 1.0))
     except subprocess.TimeoutExpired:
         os.killpg(proc.pid, signal.SIGKILL)
@@ -168,9 +178,9 @@ def run_worker(args, work: str, t0: float) -> tuple[list[dict], dict | None, str
         log_tail = f.read()[-4000:]
     res_path = os.path.join(work, "result.json")
     if proc.returncode != 0 or not os.path.exists(res_path):
-        return shapes, None, log_tail
+        return None, log_tail
     with open(res_path) as f:
-        return shapes, json.load(f), log_tail
+        return json.load(f), log_tail
 
 
 # ------------------------------------------------------------------ oracle
@@ -200,7 +210,7 @@ def check_replies(orc: oracle.Oracle, reqs: dict, records: list[dict]) -> list[s
             why = orc.check_pair(got, req["ref"], req["ref2"])
         elif op == "time":
             why = orc.check_time(got, req["ref"], rec["wall0"], rec["wall1"])
-        elif op == "radius_batch":
+        elif op in ("radius_batch", "radius_grid"):
             why = orc.check_radius_batch(got, req["origins"], req["radius"])
         else:
             why = f"unknown op {op}"
@@ -241,89 +251,119 @@ def throughput(records: list[dict]) -> float:
     return rate
 
 
-def end_to_end(res: dict) -> dict:
-    recs = [r for r in res["records"] if r["ok"]]
+def p50_gmean_ms(records: list[dict], ops) -> float:
+    """Geometric mean, over the request types the workload sends, of each
+    type's median latency (ms). Every type weighs the same, whatever the
+    mix: a change that halves one of k types' latency lowers it by a factor
+    2^(1/k)."""
+    logs = []
+    for op in ops:
+        lat = [r["lat_s"] for r in records if r["op"] == op and r["ok"]]
+        if not lat:
+            raise NoSamples(f"no completed {op} request")
+        logs.append(math.log(stats.median(lat) * 1000.0))
+    return math.exp(sum(logs) / len(logs))
+
+
+def end_to_end(res: dict, ops) -> dict:
     return {
         "setup_s": res["setup"]["setup_s"],
         "req_per_s": throughput(res["records"]),
-        "p50_ms": stats.median(_ms([r["lat_s"] for r in recs])) or 0.0,
+        "p50_gmean_ms": p50_gmean_ms(res["records"], ops),
     }
 
 
-def per_layer(res: dict) -> tuple[dict, list[str]]:
+#: request types behind each probe-based per-layer metric
+FUZZY_OPS = ("fuzzy", "best_fuzzy")
+RADIUS_OPS = ("radius", "radius_ll", "radius_pts")
+
+
+def per_layer(res: dict, ops) -> tuple[dict, list[str]]:
+    """Per-layer metrics of a traced run. A metric whose request types the
+    workload does not send reads 0; one whose types it sends but that has no
+    sample raises NoSamples."""
     recs = [r for r in res["records"] if r["ok"]]
     spans_ = res["spans"]  # (id, name, start, end, parent, req, self)
 
-    def med(xs, scale=1.0):
+    def med(key_or_fn, from_ops, scale=1.0):
+        """Median over the probed requests of `from_ops`."""
+        xs = [key_or_fn(r["probe"]) if callable(key_or_fn) else r["probe"].get(key_or_fn)
+              for r in recs if "probe" in r and r["op"] in from_ops]
         xs = [x for x in xs if x is not None]
-        return stats.median(xs) * scale if xs else 0.0
+        if xs:
+            return stats.median(xs) * scale
+        if set(from_ops) & set(ops):
+            raise NoSamples(f"no probe of {'/'.join(from_ops)}")
+        return 0.0
 
-    def probes(key, ops=None):
-        return [r["probe"].get(key) for r in recs
-                if "probe" in r and (ops is None or r["op"] in ops)]
-
-    def span_s(name):
-        """Duration of the first set-up span called `name`."""
+    def setup_s(name):
+        """Median duration of the set-up spans called `name`."""
         ds = [s[3] - s[2] for s in spans_ if s[1] == name and s[5] is None]
-        return ds[0] if ds else 0.0
+        return stats.median(ds) if ds else 0.0
 
-    fz = ("fuzzy", "best_fuzzy")
-    fuzzy_recs = [r for r in recs if r["op"] in fz and "probe" in r]
-    cands = sum(r["probe"]["candidates"] for r in fuzzy_recs)
-    by_req: dict = {}
+    fuzzy_probes = [r["probe"] for r in recs if r["op"] in FUZZY_OPS and "probe" in r]
+    cands = sum(p["candidates"] for p in fuzzy_probes)
+    # spans of the window's requests (not set-up or replays)
+    by_req: dict = {f"c{r['client']}-{r['idx']}": [] for r in res["records"]}
     for s in spans_:
-        if s[5] is not None and not s[5].endswith(":probe"):
-            by_req.setdefault(s[5], []).append(s)
+        if s[5] in by_req:
+            by_req[s[5]].append(s)
 
     def self_per_req(layer):
         total = sum(s[6] for ss in by_req.values() for s in ss
                     if s[1].startswith(layer + "."))
-        return total / len(by_req) * 1000.0 if by_req else 0.0
+        return total / len(by_req) * 1000.0
 
     m = {
-        "session.get_spark_s": span_s("session.get_spark"),
-        "ingest.fetch_s": span_s("ingest.fetch_shape_files"),
-        "ingest.write_s": span_s("ingest.ingest_shapes_json"),
+        "session.get_spark_s": setup_s("session.get_spark"),
+        "ingest.fetch_s": setup_s("ingest.fetch_shape_files"),
+        "ingest.write_s": setup_s("ingest.ingest_shapes_json"),
         # read_shapes is lazy: the scan runs in the first count
-        "ingest.read_s": span_s("ingest.read_shapes") + span_s("lookup.num_shapes"),
-        "manager.enrich_ms": med([r["lat_s"] - r["probe"]["pipeline_s"]
-                                  for r in fuzzy_recs], 1000.0),
+        "ingest.read_s": setup_s("ingest.read_shapes") + setup_s("lookup.num_shapes"),
+        "manager.enrich_ms": med(lambda p: p["facade_s"] - p["pipeline_s"],
+                                 FUZZY_OPS, 1000.0),
         "manager.self_ms_per_req": self_per_req("manager"),
-        "fuzzy.pipeline_ms": med(probes("pipeline_s", fz), 1000.0),
-        "fuzzy.damerau_ms": med([r["probe"]["pipeline_s"] - r["probe"]["no_damerau_s"]
-                                 for r in fuzzy_recs], 1000.0),
-        "fuzzy.postings_ms": med(probes("postings_s", fz), 1000.0),
-        "fuzzy.candidates": med(probes("candidates", fz)),
-        "fuzzy.useful_ratio": (sum(r["probe"]["returned"] for r in fuzzy_recs) / cands
+        "fuzzy.pipeline_ms": med("pipeline_s", FUZZY_OPS, 1000.0),
+        "fuzzy.damerau_ms": med(lambda p: p["pipeline_s"] - p["no_damerau_s"],
+                                FUZZY_OPS, 1000.0),
+        "fuzzy.postings_ms": med("postings_s", FUZZY_OPS, 1000.0),
+        "fuzzy.candidates": med("candidates", FUZZY_OPS),
+        "fuzzy.useful_ratio": (sum(p["returned"] for p in fuzzy_probes) / cands
                                if cands else 0.0),
         "fuzzy.self_ms_per_req": self_per_req("fuzzy"),
-        "radius.search_ms": med(probes("search_s"), 1000.0),
-        "radius.rows_returned": med(probes("rows")),
-        "radius.pair_distances_ms": med(probes("pair_s"), 1000.0),
-        "radius.join_s": med(probes("join_s")),
-        "radius.join_pairs": med(probes("join_pairs")),
+        "radius.search_ms": med("search_s", RADIUS_OPS, 1000.0),
+        "radius.rows_returned": med("rows", RADIUS_OPS),
+        "radius.pair_distances_ms": med("pair_s", ("pair",), 1000.0),
+        "radius.join_s": med("join_s", ("radius_batch",)),
+        "radius.join_pairs": med("join_pairs", ("radius_batch",)),
         "radius.self_ms_per_req": self_per_req("radius"),
-        "lookup.by_ref_ms": med(probes("by_ref_s"), 1000.0),
-        "lookup.by_id_ms": med(probes("by_id_s"), 1000.0),
-        "lookup.local_time_ms": med(probes("local_time_s"), 1000.0),
+        "lookup.by_ref_ms": med("by_ref_s", ("by_ref",), 1000.0),
+        "lookup.by_id_ms": med("by_id_s", ("by_id",), 1000.0),
+        "lookup.local_time_ms": med("local_time_s", ("time",), 1000.0),
         "lookup.self_ms_per_req": self_per_req("lookup"),
-        "trace.facade_p50_ms": med([r["lat_s"] for r in recs], 1000.0),
-        "trace.spans_per_req": med([len(ss) for ss in by_req.values()]),
+        "grid.write_s": setup_s("grid.write_gridded_shapes"),
+        "grid.join_s": med("join_s", ("radius_grid",)),
+        "grid.join_pairs": med("join_pairs", ("radius_grid",)),
+        "grid.self_ms_per_req": self_per_req("grid"),
+        "trace.p50_gmean_ms": p50_gmean_ms(recs, ops),
+        "trace.spans_per_req": stats.median([len(ss) for ss in by_req.values()]),
         "jvm.peak_rss_mb": res["jvm_peak_rss_kb"] / 1024.0,
     }
-    m["trace.overhead_ms_per_req"] = (m["trace.spans_per_req"]
-                                      * res["wrapper_cost_s"] * 1000.0)
+    m["trace.wrapper_ms_per_req"] = (m["trace.spans_per_req"]
+                                     * res["wrapper_cost_s"] * 1000.0)
     for k, kind in enumerate(("jobs", "stages", "tasks")):
         for op in ALL_OPS:
-            m[f"spark.{kind}_per_req.{op}"] = med(
-                [r["jobs"][k] for r in recs if r["op"] == op])
+            counts = [r["jobs"][k] for r in recs if r["op"] == op]
+            if not counts and op in ops:
+                raise NoSamples(f"no Spark counts of {op}")
+            m[f"spark.{kind}_per_req.{op}"] = stats.median(counts) if counts else 0.0
     lines = ["  self time per request (mean, ms): " + ", ".join(
         f"{layer} {m[f'{layer}.self_ms_per_req']:.1f}"
-        for layer in ("manager", "fuzzy", "radius", "lookup")),
-        f"  tracing overhead: {m['trace.spans_per_req']:.0f} spans/request x "
-        f"{res['wrapper_cost_s'] * 1e6:.2f} us = {m['trace.overhead_ms_per_req']:.4f} ms; "
-        f"traced request p50 {m['trace.facade_p50_ms']:.1f} ms (compare with p50_ms "
-        f"of an untraced run)"]
+        for layer in ("manager", "fuzzy", "radius", "lookup", "grid")),
+        f"  span wrappers: {m['trace.spans_per_req']:.0f} spans/request x "
+        f"{res['wrapper_cost_s'] * 1e6:.2f} us = {m['trace.wrapper_ms_per_req']:.4f} ms",
+        f"  traced p50_gmean_ms {m['trace.p50_gmean_ms']:.1f}: the tracing overhead is "
+        f"this minus p50_gmean_ms of an untraced run of the same seed"]
     return m, lines
 
 
@@ -342,22 +382,25 @@ def main(argv=None) -> int:
         print(f"benchmark: the package yat_geo_db_spark is not under {ROOT}",
               file=sys.stderr)
         return 2
+    ops = WORKLOAD_OPS[args.workload]
     work = os.path.join(HERE, ".work", f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     try:
-        shapes, res, log_tail = run_worker(args, work, t0)
-        if res is None:
-            print("benchmark: the worker failed; end of its log:\n" + log_tail,
-                  file=sys.stderr)
-            return 1
-        reqs = {}
-        with open(os.path.join(work, "inputs.json")) as f:
-            for k, stream in enumerate(json.load(f)["clients"]):
-                for i, req in enumerate(stream):
-                    reqs[(k, i)] = req
+        # inputs are made before the worker starts, so that generating them
+        # does not compete with the worker's set-up for the processors
+        shapes, inputs = make_inputs(args.workload, args.seed, work)
+        with open(os.path.join(work, "inputs.json"), "w") as f:
+            json.dump(inputs, f)
+        res, log_tail = run_worker(args, work, t0)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    if res is None:
+        print("benchmark: the worker failed; end of its log:\n" + log_tail,
+              file=sys.stderr)
+        return 1
+    reqs = {(k, i): req for k, stream in enumerate(inputs["clients"])
+            for i, req in enumerate(stream)}
 
     records = res["records"]
     orc = oracle.Oracle(shapes)
@@ -371,7 +414,10 @@ def main(argv=None) -> int:
     print(f"workload={args.workload} seed={args.seed} seconds={args.seconds} "
           f"trace={args.trace} shapes={res['n_shapes']}")
     print(f"  setup: session {su['session_s']:.2f} s + load_data {su['load_s']:.2f} s"
-          f" + first scan {su['materialize_s']:.2f} s + warm-up {su['warmup_s']:.2f} s")
+          f" + first scan {su['materialize_s']:.2f} s (median of loads "
+          + ", ".join(f"{x:.2f}" for x in su["loads_s"])
+          + f" s) + gridded write {su['grid_s']:.2f} s + warm-up {su['warmup_s']:.2f} s")
+    print(f"  window {res['window_s']:.2f} s")
     for line in latency_lines(records):
         print(line)
     print(f"  requests: attempted {attempted}, errored {len(errored)}, lost to JVM "
@@ -382,13 +428,19 @@ def main(argv=None) -> int:
     print(f"  oracle: {'PASS' if not mismatches else 'FAIL'} ({checked} replies checked)")
     print(f"  jvm peak RSS {res['jvm_peak_rss_kb'] / 1024.0:.0f} MB")
 
-    if args.trace:
-        values, lines = per_layer(res)
-        units = per_layer_units()
-        for line in lines:
-            print(line)
-    else:
-        values, units = end_to_end(res), END_TO_END
+    try:
+        if args.trace:
+            if "spans" not in res:
+                raise NoSamples("the JVM died, so the run has no trace")
+            values, lines = per_layer(res, ops)
+            units = per_layer_units()
+            for line in lines:
+                print(line)
+        else:
+            values, units = end_to_end(res, ops), END_TO_END
+    except NoSamples as exc:
+        print(f"benchmark: cannot report the metrics: {exc}", file=sys.stderr)
+        return 1
     metrics = {}
     for name, unit in units.items():
         v = values[name]

@@ -9,8 +9,8 @@ the run ends. Nothing in the program changes.
 Lazy DataFrame builders return before any Spark job runs, so their spans
 measure plan construction; the execution lands in the span of the caller that
 collects (the facade). The worker therefore also times each layer's pipeline
-collected on its own (see worker.py), and counts Spark jobs, stages and tasks
-per request through job groups.
+collected on its own after the measuring window (see worker.py), and counts
+Spark jobs, stages and tasks per request through job groups.
 """
 
 from __future__ import annotations
@@ -20,15 +20,14 @@ import itertools
 import threading
 import time
 
-#: public functions wrapped per layer (module path relative to the package)
+#: public functions wrapped per layer: the ones the workloads reach
 LAYERS = {
     "session": ("yat_geo_db_spark.session", ("get_spark",)),
     "ingest": ("yat_geo_db_spark.geo.ingest",
                ("fetch_shape_files", "ingest_shapes_json", "read_shapes",
                 "write_shapes", "normalize_shapes")),
     "fuzzy": ("yat_geo_db_spark.geo.fuzzy",
-              ("fuzzy_search", "best_fuzzy_search", "build_postings",
-               "add_entities", "fuzzy_join")),
+              ("fuzzy_search", "best_fuzzy_search", "build_postings")),
     "radius": ("yat_geo_db_spark.geo.radius",
                ("radius_search", "radius_search_lat_lng", "pair_distances",
                 "radius_join", "origin_df")),
@@ -37,12 +36,12 @@ LAYERS = {
                 "num_shapes")),
     "grid": ("yat_geo_db_spark.geo.grid",
              ("write_gridded_shapes", "read_gridded_shapes",
-              "radius_search_gridded", "radius_join_gridded")),
+              "radius_join_gridded")),
 }
 
 #: facade methods wrapped as the `manager` layer
 MANAGER_METHODS = (
-    "load_data", "fuzzy_search", "best_fuzzy_search", "add_entity",
+    "load_data", "fuzzy_search", "best_fuzzy_search",
     "radius_search", "radius_search_lat_lng", "radius_lat_lng_search",
     "get_shape_by_ref_code", "get_shape_by_id", "get_shape_pair_distance",
     "get_shape_time_by_ref_code",

@@ -50,29 +50,39 @@ def test_streams_deterministic():
 def test_session_shape():
     shapes = gen.generate_shapes(2, N)
     for sess in gen.autocomplete_sessions(shapes, 2, 50):
+        # fixed length, so a run that completes k sessions sends a fixed mix
+        assert len(sess) == gen.SESSION_KEYS + 1
         assert sess[-1]["op"] == "best_fuzzy"
         qs = [r["q"] for r in sess[:-1]]
-        assert all(r["op"] == "fuzzy" for r in sess[:-1])
+        assert all(r["op"] == "fuzzy" and r["filters"] is None for r in sess[:-1])
         assert len(qs[0]) == 3
         # one keystroke per request
         assert all(len(b) == len(a) + 1 and b.startswith(a) for a, b in zip(qs, qs[1:]))
-        assert sess[-1]["q"] == qs[-1]
+        # the submit is the whole typed name, scoped by one dotted-path filter
+        assert sess[-1]["q"].startswith(qs[-1])
+        (key, value), = sess[-1]["filters"].items()
+        assert key in ("ref_data.country", "ref_data.state_prov") and value
 
 
 def test_spatial_mix_is_fixed_per_cycle():
     shapes = gen.generate_shapes(2, N)
-    cycle = sum(k for _, k in gen.SPATIAL_CYCLE)
-    stream = gen.spatial_stream(shapes, 9, 4)
-    assert len(stream) == 4 * cycle
-    for c in range(4):
+    cycle = len(gen.SPATIAL_CYCLE)
+    stream = gen.spatial_stream(shapes, 9, 8)
+    assert len(stream) == 8 * cycle
+    radii = []
+    for c in range(8):
         part = stream[c * cycle:(c + 1) * cycle]
-        assert sorted(r["op"] for r in part) == sorted(
-            op for op, k in gen.SPATIAL_CYCLE for _ in range(k))
-        radius = [r for r in part if r["op"] == "radius"]
-        assert sorted(r["radius"] for r in radius) == list(gen.RADIUS_MILES)
-        assert sum(r["country_exact"] for r in radius) == 1
-        assert sorted(r["radius"] for r in part if r["op"] in ("radius_ll", "radius_pts")) \
-            == list(gen.LATLNG_MILES)
+        assert sorted(r["op"] for r in part) == sorted(gen.SPATIAL_CYCLE)
+        radius, = [r for r in part if r["op"] == "radius"]
+        assert radius["country_exact"] == (radius["radius"] == gen.RADIUS_MILES[0])
+        radii.append(radius["radius"])
+        ll = {r["radius"] for r in part if r["op"] in ("radius_ll", "radius_pts")}
+        assert len(ll) == 1 and ll <= set(gen.LATLNG_MILES)
+        for r in part:
+            if r["op"] in ("radius_batch", "radius_grid"):
+                assert len(r["origins"]) == gen.BATCH_ORIGINS
+    # the radii rotate: every four cycles send each radius once
+    assert sorted(radii[:4]) == sorted(radii[4:]) == list(gen.RADIUS_MILES)
 
 
 def test_dump_round_trip(tmp_path):

@@ -3,6 +3,8 @@
 import json
 import os
 
+import pytest
+
 import run
 import stats
 
@@ -55,3 +57,20 @@ def test_benchmark_json_matches_harness():
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == run.per_layer_units()
     bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     assert bounds["setup_s"] == max(bounds.values()) <= 0.25
+
+
+def _rec(op, ms):
+    return {"op": op, "ok": True, "lat_s": ms / 1000.0}
+
+
+def test_p50_gmean_weighs_every_type_equally():
+    recs = [_rec("a", 100.0)] * 9 + [_rec("b", 400.0)]
+    assert run.p50_gmean_ms(recs, ("a", "b")) == pytest.approx(200.0)
+    # halving one of two types lowers it by sqrt(2), whatever the mix
+    halved = [_rec("a", 100.0)] * 9 + [_rec("b", 200.0)]
+    assert run.p50_gmean_ms(halved, ("a", "b")) == pytest.approx(200.0 / 2 ** 0.5)
+
+
+def test_p50_gmean_needs_every_sent_type():
+    with pytest.raises(run.NoSamples):
+        run.p50_gmean_ms([_rec("a", 100.0)], ("a", "b"))

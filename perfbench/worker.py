@@ -1,16 +1,19 @@
 """One workload repetition, run as a child process of `run.py`.
 
-It starts a Spark session with the program's shipped defaults, waits for the
-generated inputs, loads the shape dump through `GeoManager.load_data`, warms
-each request type once, then drives the workload's request stream through the
-`GeoManager` facade as closed-loop clients (each client sends its next request
-only after the previous reply) until the measuring window closes. Replies of
-the seeded sample are kept for the oracle, which `run.py` applies after this
-process has ended, outside the timed path.
+It reads the generated inputs, starts a Spark session with the program's
+shipped defaults, loads the shape dump through `GeoManager.load_data` (three
+times; set-up counts the median load), writes the gridded layout when the
+workload uses it, sends each request type once, then drives the workload's
+request stream through the `GeoManager` facade as closed-loop
+clients (each client sends its next request only after the previous reply)
+until the measuring window closes. Replies of the seeded sample are kept for
+the oracle, which `run.py` applies after this process has ended, outside the
+timed path.
 
-With ``--trace 1`` the span recorder is installed first, each request runs
-under its own Spark job group, and after each reply the layers' pipelines are
-collected alone (untimed by the request) to attribute its time.
+With ``--trace 1`` the span recorder is installed first and each request runs
+under its own Spark job group. After the window has closed, a few requests of
+each type are sent again one at a time, each followed by its layers'
+pipelines collected alone, to attribute the request's time to the layers.
 
 Writes ``result.json`` into the work directory.
 """
@@ -70,8 +73,9 @@ def _fuzzy_rows(rows):
             for r in rows]
 
 
-def call(m, spark, req):
-    """Issue one request through the facade. Returns the raw reply."""
+def call(m, spark, gridded, req):
+    """Issue one request through the facade (the batch joins through the
+    layer's function). Returns the raw reply."""
     op = req["op"]
     if op == "fuzzy":
         return m.fuzzy_search(req["q"], num_results=10, filters=req["filters"])
@@ -99,6 +103,14 @@ def call(m, spark, req):
             [(o["origin_id"], o["latitude"], o["longitude"]) for o in req["origins"]],
             "origin_id long, latitude double, longitude double")
         return _radius.radius_join(m.shapes, origins, req["radius"]).collect()
+    if op == "radius_grid":
+        from yat_geo_db_spark.geo import grid as _grid
+
+        origins = spark.createDataFrame(
+            [(o["origin_id"], o["latitude"], o["longitude"]) for o in req["origins"]],
+            "origin_id long, latitude double, longitude double")
+        return _grid.radius_join_gridded(gridded, origins, req["radius"],
+                                         cell_deg=GRID_CELL_DEG).collect()
     raise ValueError(f"unknown op {op}")
 
 
@@ -112,26 +124,30 @@ def compact(op, reply):
         return [{"id": r["id"], "distance": r["distance"]} for r in reply]
     if op == "time":
         return None if reply is None else reply.isoformat()
-    if op == "radius_batch":
+    if op in ("radius_batch", "radius_grid"):
         return [[r["origin_id"], r["id"], r["distance"]] for r in reply]
     return reply
 
 
-def probe(m, spark, req, reply) -> dict:
-    """Traced run only: each layer's pipeline collected on its own for the
-    same request, so the layer's share of the request can be attributed."""
+def probe(m, spark, gridded, req) -> dict:
+    """Traced run only, after the window has closed: the request is sent
+    again on its own, then each layer's pipeline for it is collected alone,
+    so the layer's share of the request is attributed without another
+    client's request running beside it."""
     import pyspark.sql.functions as F
     from yat_geo_db_spark.geo import fuzzy as _fuzzy
     from yat_geo_db_spark.geo import lookup as _lookup
     from yat_geo_db_spark.geo import radius as _radius
 
-    op, shapes, out = req["op"], m.shapes, {}
+    op, shapes = req["op"], m.shapes
 
     def timed(fn):
         t = time.perf_counter()
         res = fn()
         return time.perf_counter() - t, res
 
+    facade_s, reply = timed(lambda: call(m, spark, gridded, req))
+    out = {"facade_s": facade_s}
     if op in ("fuzzy", "best_fuzzy"):
         n = 10 if op == "fuzzy" else 1
         out["pipeline_s"], _ = timed(lambda: _fuzzy.fuzzy_search(
@@ -170,13 +186,32 @@ def probe(m, spark, req, reply) -> dict:
     elif op == "time":
         out["local_time_s"], _ = timed(lambda: _lookup.shape_local_time(
             _lookup.shape_by_ref_code(shapes, req["ref"])).first())
-    elif op == "radius_batch":
-        # the request is the join itself; its time is the request's latency
-        out["join_pairs"] = len(reply)
+    elif op in ("radius_batch", "radius_grid"):
+        # the request is the join itself
+        out["join_s"], out["join_pairs"] = facade_s, len(reply)
     return out
 
 
+def run_clients(fn, per_client: list[tuple]) -> None:
+    """Run fn(*args) for each client's args in its own thread; wait for all."""
+    threads = [threading.Thread(target=fn, args=args) for args in per_client]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+
+
 # -------------------------------------------------------------------- main
+
+#: loads of the dump per run; set-up time counts the median one
+SETUP_LOADS = 3
+#: cell edge (degrees) of the gridded layout the spatial workload writes
+#: in set-up: at the default 1 degree the write of the 60k-shape table
+#: makes ~1,300 cell directories and takes ~13 s of a run's set-up
+GRID_CELL_DEG = 5.0
+#: traced run: requests of each type replayed with probes after the window
+PROBES_PER_OP = 2
+
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
@@ -185,6 +220,8 @@ def main(argv=None) -> int:
     ap.add_argument("--trace", type=int, default=0)
     args = ap.parse_args(argv)
     work = args.work
+    with open(os.path.join(work, "inputs.json")) as f:
+        inputs = json.load(f)
 
     tracer = None
     if args.trace:
@@ -193,6 +230,7 @@ def main(argv=None) -> int:
         tracer = spans.Tracer()
         tracer.install()
     from yat_geo_db_spark import session
+    from yat_geo_db_spark.geo import grid
     from yat_geo_db_spark.manager import GeoManager
 
     spark = session.get_spark()
@@ -203,29 +241,40 @@ def main(argv=None) -> int:
     rss = RssSampler(jvm_pid)
     rss.start()
 
-    ready = os.path.join(work, "ready")
-    t_wait = time.perf_counter()
-    while not os.path.exists(ready):
-        if time.perf_counter() - t_wait > 120:
-            raise SystemExit("inputs never became ready")
-        time.sleep(0.02)
-    with open(os.path.join(work, "inputs.json")) as f:
-        inputs = json.load(f)
-
-    t1 = time.perf_counter()
-    m = GeoManager(spark)
-    m.load_data(os.path.join(work, "store"), base_url=inputs["base_url"])
-    t2 = time.perf_counter()
-    n_shapes = m.num_shapes
+    # the dump is loaded SETUP_LOADS times, each into a fresh store, and the
+    # last load serves; set-up counts the median load, since one load's time
+    # spreads more than the other parts of set-up
+    loads, m = [], None
+    for k in range(SETUP_LOADS):
+        if m is not None:
+            m.shapes.unpersist()
+        t1 = time.perf_counter()
+        m = GeoManager(spark)
+        m.load_data(os.path.join(work, f"store{k}"), base_url=inputs["base_url"])
+        t2 = time.perf_counter()
+        n_shapes = m.num_shapes
+        loads.append((t2 - t1, time.perf_counter() - t2))
+    load_s, materialize_s = sorted(loads, key=sum)[SETUP_LOADS // 2]
     t3 = time.perf_counter()
-    # one request of each type before timing starts: the first request of a
-    # type pays one-off costs (Python UDF workers, code generation) that
-    # every process pays once, so they belong to set-up
-    for req in inputs["warmup"]:
-        call(m, spark, req)
+    gridded = None
+    if inputs["gridded"]:
+        path = os.path.join(work, "gridded")
+        grid.write_gridded_shapes(m.shapes, path, cell_deg=GRID_CELL_DEG)
+        gridded = grid.read_gridded_shapes(spark, path)
     t4 = time.perf_counter()
-    setup = {"session_s": session_s, "load_s": t2 - t1, "materialize_s": t3 - t2,
-             "warmup_s": t4 - t3, "setup_s": session_s + (t4 - t1)}
+    # one request of each type, the clients running side by side as in the
+    # window, before timing starts: the first requests pay one-off costs
+    # (Python UDF worker start-up, code generation) that every process pays
+    # once, so they belong to set-up
+    def warm(reqs: list[dict]) -> None:
+        for req in reqs:
+            call(m, spark, gridded, req)
+    run_clients(warm, [(reqs,) for reqs in inputs["warmup"]])
+    t5 = time.perf_counter()
+    setup = {"session_s": session_s, "load_s": load_s, "materialize_s": materialize_s,
+             "loads_s": [sum(x) for x in loads], "grid_s": t4 - t3,
+             "warmup_s": t5 - t4,
+             "setup_s": session_s + load_s + materialize_s + (t5 - t3)}
 
     records: list[dict] = []
     lock = threading.Lock()
@@ -256,9 +305,9 @@ def main(argv=None) -> int:
             try:
                 if tracer is not None:
                     with tracer.span("req." + req["op"]):
-                        reply = call(m, spark, req)
+                        reply = call(m, spark, gridded, req)
                 else:
-                    reply = call(m, spark, req)
+                    reply = call(m, spark, gridded, req)
                 rec["lat_s"] = time.perf_counter() - t
                 rec["ok"] = True
             except Exception as exc:  # counted as failed
@@ -277,35 +326,34 @@ def main(argv=None) -> int:
             lat_sum, done = lat_sum + rec["lat_s"], done + 1
             if rec["ok"] and req.get("chk"):
                 rec["resp"] = compact(req["op"], reply)
-            if rec["ok"] and tracer is not None:
-                sc.setJobGroup(rid + ":probe", "probe")
-                tracer.set_request(rid + ":probe")
-                rec["probe"] = probe(m, spark, req, reply)
-                if req["op"] == "radius_batch":
-                    rec["probe"]["join_s"] = rec["lat_s"]
             if tracer is not None:
                 tracer.set_request(None)
             with lock:
                 records.append(rec)
 
     streams = inputs["clients"]
-    threads = [threading.Thread(target=client, args=(k, s)) for k, s in enumerate(streams)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
+    run_clients(client, list(enumerate(streams)))
     t_end = time.perf_counter()
 
     result = {"setup": setup, "n_shapes": n_shapes, "records": records,
               "window_s": t_end - t_begin, "jvm_died": state["jvm_died"],
               "lost": state["lost"]}
-    if tracer is not None:
+    if tracer is not None and not state["jvm_died"]:
         from spans import job_group_counts
 
         time.sleep(0.5)  # let the listener bus deliver the last job events
         for rec in records:
-            rid = f"c{rec['client']}-{rec['idx']}"
-            rec["jobs"] = job_group_counts(sc, rid)
+            rec["jobs"] = job_group_counts(sc, f"c{rec['client']}-{rec['idx']}")
+        replayed: dict = {}
+        for rec in sorted(records, key=lambda r: (r["client"], r["idx"])):
+            if not rec["ok"] or replayed.get(rec["op"], 0) >= PROBES_PER_OP:
+                continue
+            replayed[rec["op"]] = replayed.get(rec["op"], 0) + 1
+            rid = f"c{rec['client']}-{rec['idx']}:probe"
+            sc.setJobGroup(rid, "probe")
+            tracer.set_request(rid)
+            rec["probe"] = probe(m, spark, gridded, streams[rec["client"]][rec["idx"]])
+            tracer.set_request(None)
         result["wrapper_cost_s"] = tracer.wrapper_cost_s()
         self_t = tracer.self_times()
         result["spans"] = [list(s) + [self_t[s[0]]] for s in tracer.spans]
